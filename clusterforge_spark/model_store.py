@@ -20,7 +20,10 @@ Layout under ``<path>/``:
                pipelines can model.load() it directly.
 
 All writes go through Spark writers, so the path may be any Hadoop-FS
-URI (local, HDFS, s3a), same as any table.
+URI (local, HDFS, s3a), same as any table. Reads of the KB-sized model
+and meta dirs happen on the driver (pyarrow) when the dir is local, and
+through Spark for other URIs, so serving a saved local model runs no
+Spark job. ``load_model`` returns None when no model is saved at the path.
 """
 
 from __future__ import annotations
@@ -90,27 +93,57 @@ def save_model(
         mllib_model.write().overwrite().save(f"{base}/mllib")
 
 
+def _read_rows(spark: SparkSession, path: str) -> list[dict] | None:
+    """Rows of a small parquet dir as dicts, or None if absent/unreadable.
+
+    Local dirs are read on the driver with pyarrow — no Spark job, which
+    keeps a cold session's serve path job-free (the first Spark job of a
+    fresh process costs seconds in fixed overhead). Other URIs take the
+    Spark read, and so does a local dir pyarrow cannot read (e.g. an
+    exotic codec): it must not be treated as absent, or the caller would
+    rebuild it every session."""
+    files = _R._local_parquet_files(path)
+    if files is not None:
+        try:
+            import pyarrow.parquet as pq
+
+            return [row for f in files for row in pq.read_table(f).to_pylist()]
+        except Exception:
+            pass  # fall through to the Spark read below
+    try:
+        return [r.asDict() for r in spark.read.parquet(path).collect()]
+    except Exception:
+        return None
+
+
+def _read_meta(spark: SparkSession, path: str) -> dict[str, str]:
+    """The ``meta/`` (key, value) rows under ``path`` as a dict ({} if absent)."""
+    rows = _read_rows(spark, f"{path.rstrip('/')}/meta")
+    return {r["key"]: r["value"] for r in rows or ()}
+
+
 def model_exists(spark: SparkSession, path: str) -> bool:
     """True if ``path`` holds a readable saved model (meta present)."""
-    try:
-        rows = spark.read.parquet(f"{path.rstrip('/')}/meta").collect()
-    except Exception:
-        return False
-    return any(r.key == "format_version" for r in rows)
+    return "format_version" in _read_meta(spark, path)
 
 
-def load_model(spark: SparkSession, path: str) -> SavedModel:
+def load_model(spark: SparkSession, path: str) -> SavedModel | None:
+    """The model saved under ``path``, or None when none is saved there
+    (``meta/`` missing or without a format_version)."""
+    meta = _read_meta(spark, path)
+    if "format_version" not in meta:
+        return None
     base = path.rstrip("/")
-    meta = {r.key: r.value for r in spark.read.parquet(f"{base}/meta").collect()}
-    scaler_row = spark.read.parquet(f"{base}/scaler").collect()[0]
-    cen_rows = sorted(
-        spark.read.parquet(f"{base}/centroids").collect(), key=lambda r: r.cluster
-    )
+    scaler = _read_rows(spark, f"{base}/scaler")
+    cen_rows = _read_rows(spark, f"{base}/centroids")
+    if not scaler or cen_rows is None:
+        raise FileNotFoundError(f"model {path} has meta/ but no readable scaler/ or centroids/")
+    cen_rows.sort(key=lambda r: r["cluster"])
     return SavedModel(
         k=int(meta["k"]),
         cols=tuple(json.loads(meta["cols"])),
-        scaler_params=scaler_row.asDict(),
-        centroids=[[float(v) for v in r.center] for r in cen_rows],
+        scaler_params=scaler[0],
+        centroids=[[float(v) for v in r["center"]] for r in cen_rows],
         cluster_sizes=[
             (int(c), int(s), float(p)) for c, s, p in json.loads(meta["cluster_sizes"])
         ],
@@ -126,12 +159,12 @@ def load_mllib_model(spark: SparkSession, path: str):
 
 
 # ---------------------------------------------------------------------------
-# Generic derived-artifact store (r8): parquet-persisted engine state that
+# Generic derived-artifact store: parquet-persisted engine state that
 # is expensive to rebuild but cheap to validate — the trained ANN codebook,
-# the dedup components table, the synthesized clustered ANN corpus. The
-# round-7 verdict's top item: every one of these was per-session state, so
-# a fresh session RETRAINED before it could serve (measured ~25 s cold for
-# the ANN frontier at sf0.1). An artifact is
+# the dedup components table, the synthesized clustered ANN corpus. As
+# per-session state, every one of these had to be RETRAINED before a fresh
+# session could serve (measured ~25 s cold for the ANN frontier at sf0.1).
+# An artifact is
 #
 #   <path>/data/   the DataFrame, plain parquet (portable, exact doubles)
 #   <path>/meta/   (key string, value string): format_version, kind, and
@@ -145,10 +178,10 @@ def load_mllib_model(spark: SparkSession, path: str):
 #   fingerprint (caller's ``expect``): corpus row count + id sum + every
 #     derivation parameter — catches resizes, regenerations and parameter
 #     drift with one pruned single-column aggregate per snapshot.
-#   self-consistency (r9): the artifact's OWN row count (``self_n_rows``) and
+#   self-consistency: the artifact's OWN row count (``self_n_rows``) and
 #     an order-independent content checksum (``self_content_crc``) are recorded in
 #     meta at save time, computed from the BYTES ACTUALLY WRITTEN. Loads
-#     re-count the data (a parquet footer-only job, milliseconds) and
+#     re-count the data from the parquet footers (milliseconds) and
 #     reject on mismatch — so a torn/interleaved write (two concurrent
 #     overwrites leaving part files of both) can never serve duplicated or
 #     partial rows even though its meta fingerprint still matches. The crc
@@ -169,8 +202,9 @@ def load_mllib_model(spark: SparkSession, path: str):
 # identity gate (tests/test_persistence.py + scripts/selfcheck_artifacts.py)
 # exists to catch exactly the case where that discipline slips. Saves are
 # best-effort: a failed write (read-only FS) logs a WARNING and falls back
-# to the in-session build, never fails the query. All IO goes through
-# Spark writers/readers, so paths may be any Hadoop-FS URI — on a cluster
+# to the in-session build, never fails the query. All writes go through
+# Spark writers and non-local reads through Spark readers (local meta and
+# footers are read on the driver), so paths may be any Hadoop-FS URI — on a cluster
 # this is the shared model registry location; locally it defaults to
 # ``<repo>/spark-warehouse/models`` (env SPARK_GRAFT_MODEL_DIR overrides).
 # ---------------------------------------------------------------------------
@@ -197,15 +231,11 @@ def artifact_path(sf_dir: str, name: str, root: str | None = None) -> str:
     return os.path.join(root or default_model_dir(), tag, name)
 
 
-def _strip_file_scheme(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
 def _local_base_for_staging(spark: SparkSession, path: str) -> str | None:
     """The os-level path to stage the save through, or None when the
     path does NOT resolve to the local filesystem (direct write applies).
 
-    Syntax alone is not enough (r9 review): a schemeless path resolves
+    Syntax alone is not enough: a schemeless path resolves
     against ``fs.defaultFS``, which on a cluster is typically HDFS/S3 —
     staging there would write the data remotely and then fail the
     os.rename locally, breaking every save. So consult the path's actual
@@ -220,14 +250,13 @@ def _local_base_for_staging(spark: SparkSession, path: str) -> str | None:
             return None
     except Exception:
         # probe failed (JVM unavailable mid-shutdown etc.) — we cannot
-        # prove the path is local, so fall back to the direct write (the
-        # pre-r9 safe path: correct on every FS via the count-validated
-        # load). Assuming local here would stage onto a remote
-        # fs.defaultFS, fail every os.rename, and leak remote
-        # .__stage__ dirs the os.listdir-local prune can't see
-        # (r10 ADVICE fix).
+        # prove the path is local, so fall back to the direct write
+        # (correct on every FS via the count-validated load). Assuming
+        # local here would stage onto a remote fs.defaultFS, fail every
+        # os.rename, and leak remote .__stage__ dirs the os.listdir-local
+        # prune can't see.
         return None
-    return _strip_file_scheme(path)
+    return _R.strip_file_scheme(path)
 
 
 #: marker substrings of the staged-save scratch dirs — never valid
@@ -386,41 +415,50 @@ def save_artifact(
 
 
 def artifact_meta(spark: SparkSession, path: str) -> dict[str, str] | None:
-    """The artifact's meta dict, or None if absent/unreadable.
+    """The artifact's meta dict, or None if absent/unreadable or not of
+    the current ARTIFACT_VERSION (read through ``_read_rows``: driver-side
+    pyarrow on local registries, Spark elsewhere)."""
+    meta = _read_meta(spark, path)
+    return meta if meta.get("format_version") == ARTIFACT_VERSION else None
 
-    Local registries read the (coalesced, KB-sized) meta parquet
-    driver-side via pyarrow — no Spark job, so a cold session's serve
-    path stays job-free until the first real query (r10 verdict item 4:
-    the first Spark job of a fresh process costs ~3 s in fixed overhead,
-    and the meta read was paying it). Non-local URIs keep the Spark
-    read; a pyarrow failure on a local path ALSO falls through to the
-    Spark read (r11, ADVICE: a meta parquet readable by Spark but not
-    pyarrow — e.g. an exotic codec — must not be treated as absent, or
-    the artifact gets spuriously rebuilt every session)."""
-    base = f"{path.rstrip('/')}/meta"
-    files = _R._local_parquet_files(base)
-    if files is not None:
-        try:
-            import pyarrow.parquet as pq
 
-            meta: dict[str, str] = {}
-            for f in files:
-                t = pq.read_table(f, columns=["key", "value"])
-                meta.update(zip(t.column("key").to_pylist(),
-                                t.column("value").to_pylist()))
-            if meta.get("format_version") != ARTIFACT_VERSION:
-                return None
-            return meta
-        except Exception:
-            pass  # fall through to the Spark read below
+def _artifact_status(
+    spark: SparkSession, path: str, meta: dict[str, str], deep: bool
+) -> str:
+    """Self-consistency verdict of an artifact whose ``meta`` was read:
+
+    ``valid``          row count (and, when ``deep``, content crc) check
+    ``no_data``        the data dir is unreadable
+    ``count_mismatch`` data cardinality != meta self_n_rows (torn write)
+    ``crc_mismatch``   content differs from the bytes recorded at save
+    ``crc_unverifiable`` the crc scan itself failed (transient) —
+                       retry, don't discard
+
+    The count comes from the parquet footers (driver-side pyarrow on
+    local registries, no Spark job), else a footer-only Spark count. It
+    is the torn-write guard: an interleaved pair of concurrent overwrites
+    that leaves part files of both writes (duplicated rows) or a partial
+    file set can pass every fingerprint key, but not its own recorded
+    cardinality. ``deep`` adds the full-scan content checksum — the audit
+    surface, not the serve path."""
+    data_path = f"{path.rstrip('/')}/data"
     try:
-        rows = spark.read.parquet(base).collect()
+        cnt = _R.footer_row_count(data_path)
+        if cnt is None:
+            cnt = spark.read.parquet(data_path).count()
     except Exception:
-        return None
-    meta = {r.key: r.value for r in rows}
-    if meta.get("format_version") != ARTIFACT_VERSION:
-        return None
-    return meta
+        return "no_data"
+    if int(meta.get("self_n_rows", -1)) != cnt:
+        return "count_mismatch"
+    stored_crc = meta.get("self_content_crc")
+    if not deep or stored_crc in (None, "None"):
+        return "valid"  # None: saved without a crc (schema outside to_json)
+    crc = _content_crc(spark, data_path)
+    if crc is None:
+        # a failed scan is not evidence of corruption: report it as its
+        # own verdict so an operator retries instead of discarding
+        return "crc_unverifiable"
+    return "valid" if str(crc) == stored_crc else "crc_mismatch"
 
 
 def load_artifact(
@@ -429,76 +467,34 @@ def load_artifact(
     """Read a validated artifact: None unless the meta exists, carries the
     current format_version, every ``expect`` key matches (string compare —
     fingerprints are written as str), and the data's row count equals the
-    ``n_rows`` recorded at save time. The count is parquet footer-only —
-    driver-side pyarrow on local registries (no Spark job at all, r10),
-    a footer-only Spark job elsewhere — and is the torn-write guard: an
-    interleaved pair of concurrent overwrites that leaves part files of
-    both writes (duplicated rows) or a partial file set can pass every
-    fingerprint key, but not its own recorded cardinality."""
+    ``self_n_rows`` recorded at save time (``_artifact_status`` without
+    the crc)."""
     meta = artifact_meta(spark, path)
     if meta is None:
         return None
     for k, v in (expect or {}).items():
         if meta.get(k) != str(v):
             return None
+    status = _artifact_status(spark, path, meta, deep=False)
+    if status != "valid":
+        _LOG.warning("artifact %s failed its self-consistency check (%s); "
+                     "treating as absent", path, status)
+        return None
     try:
-        data_path = f"{path.rstrip('/')}/data"
-        # footer-only cardinality (pyarrow, driver-side — no Spark job on
-        # local registries; r10); the Spark count stays as the
-        # any-filesystem fallback. Same guard either way: a torn write's
-        # part files can pass every fingerprint key but not the
-        # cardinality recorded from the written files.
-        cnt = _R.footer_row_count(data_path)
-        df = spark.read.parquet(data_path)
-        if cnt is None:
-            cnt = df.count()
-        if int(meta["self_n_rows"]) != cnt:
-            _LOG.warning(
-                "artifact %s failed its self-consistency count "
-                "(meta self_n_rows=%s); treating as absent", path, meta["self_n_rows"]
-            )
-            return None
-        return df
+        return spark.read.parquet(f"{path.rstrip('/')}/data")
     except Exception:
         return None
 
 
 def verify_artifact(spark: SparkSession, path: str) -> str:
-    """Deep self-consistency verdict for one artifact:
-
-    ``valid``          meta + version + row count + content crc all check
-    ``absent``         no readable meta (or wrong format_version)
-    ``no_data``        meta present but the data dir is unreadable
-    ``count_mismatch`` data cardinality != meta n_rows (torn write)
-    ``crc_mismatch``   content differs from the bytes recorded at save
-    ``crc_unverifiable`` the verify scan itself failed (transient) —
-                       retry, don't discard
-
-    Unlike load_artifact's serve-path check (count only), this re-scans
-    the data for the order-independent checksum — the registry audit /
-    selfcheck surface, not the hot path."""
+    """Deep self-consistency verdict for one artifact: ``absent`` when it
+    has no readable meta (or a wrong format_version), else the
+    ``_artifact_status`` verdict including the content crc. The registry
+    audit / selfcheck surface, not the hot path."""
     meta = artifact_meta(spark, path)
     if meta is None:
         return "absent"
-    base = path.rstrip("/")
-    try:
-        cnt = spark.read.parquet(f"{base}/data").count()
-    except Exception:
-        return "no_data"
-    if int(meta.get("self_n_rows", -1)) != cnt:
-        return "count_mismatch"
-    stored_crc = meta.get("self_content_crc")
-    if stored_crc in (None, "None"):
-        return "valid"  # saved without a crc (schema outside to_json)
-    crc = _content_crc(spark, f"{base}/data")
-    if crc is None:
-        # the verify SCAN failed (transient FS/executor error) — that is
-        # not evidence of corruption; report it as its own verdict so an
-        # operator retries instead of discarding the artifact (r9 review)
-        return "crc_unverifiable"
-    if str(crc) != stored_crc:
-        return "crc_mismatch"
-    return "valid"
+    return _artifact_status(spark, path, meta, deep=True)
 
 
 def artifacts_identical(spark: SparkSession, path_a: str, path_b: str) -> bool:
@@ -520,12 +516,12 @@ def artifacts_identical(spark: SparkSession, path_a: str, path_b: str) -> bool:
 def registry_report(spark: SparkSession, root: str | None = None, deep: bool = False):
     """One row per artifact in the local registry: snapshot tag, name,
     validity, a STATUS that distinguishes absent from present-but-invalid
-    (r8 verdict item 4 — an operator must be able to see that a slot holds
-    a torn or stale artifact, not just that nothing valid loads), and the
-    fingerprint meta as a JSON string. ``deep=True`` re-scans each
-    artifact's data for the content checksum (verify_artifact); the
-    default stays metadata + footer-count only. Local-FS only; on a
-    cluster, list the registry URI with the catalog of your choice."""
+    (an operator must be able to see that a slot holds a torn or stale
+    artifact, not just that nothing valid loads), and the fingerprint
+    meta as a JSON string. ``deep=True`` adds the content-checksum scan
+    of each artifact's data; the default stays metadata + footer count.
+    Local-FS only; on a cluster, list the registry URI with the catalog
+    of your choice."""
     root = root or default_model_dir()
     rows = []
     if os.path.isdir(root):
@@ -540,26 +536,12 @@ def registry_report(spark: SparkSession, root: str | None = None, deep: bool = F
                     continue
                 apath = os.path.join(tdir, name)
                 meta = artifact_meta(spark, apath)
-                if deep:
-                    status = verify_artifact(spark, apath)
-                elif meta is None:
-                    # distinguish "empty slot" from "present but invalid"
-                    has_files = (
-                        bool(os.listdir(apath)) if os.path.isdir(apath) else False
-                    )
-                    status = "invalid_meta" if has_files else "absent"
+                if meta is not None:
+                    status = _artifact_status(spark, apath, meta, deep)
+                elif os.path.isdir(apath) and os.listdir(apath):
+                    status = "invalid_meta"
                 else:
-                    try:
-                        cnt = _R.footer_row_count(f"{apath}/data")
-                        if cnt is None:
-                            cnt = spark.read.parquet(f"{apath}/data").count()
-                        status = (
-                            "valid"
-                            if int(meta.get("self_n_rows", -1)) == cnt
-                            else "count_mismatch"
-                        )
-                    except Exception:
-                        status = "no_data"
+                    status = "absent"
                 rows.append(
                     (
                         tag,

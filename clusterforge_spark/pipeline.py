@@ -332,10 +332,10 @@ def run_prediction(
     reference's refit-from-raw behavior (main.rs:31-81) runs, and the fit
     is saved to ``model_path`` if given (so the next predict is refit-free).
     """
-    from clusterforge_spark.model_store import load_model, model_exists
+    from clusterforge_spark.model_store import load_model
 
-    if model_path is not None and model_exists(spark, model_path):
-        m = load_model(spark, model_path)
+    m = load_model(spark, model_path) if model_path is not None else None
+    if m is not None:
         cluster, _dist = C.predict_point(
             m.scaler_params, tuple(tuple(c) for c in m.centroids), point, cols=m.cols
         )
@@ -355,9 +355,8 @@ def run_prediction(
     result = run_full_pipeline(
         spark, rfm, n_rows=-1, k=k, seed=seed, model_path=model_path, **kwargs
     )
-    params = result.scaler_params or FE.fit_scaler(rfm).collect()[0].asDict()
     cluster, _dist = C.predict_point(
-        params, tuple(tuple(c) for c in result.centroids), point
+        result.scaler_params, tuple(tuple(c) for c in result.centroids), point
     )
     return cluster, result
 

@@ -164,13 +164,18 @@ def events_ts_is_nanos(path: str) -> bool:
     return t == "int64" or t.startswith("timestamp[ns")
 
 
+def strip_file_scheme(path: str) -> str:
+    """``path`` without a leading ``file:`` scheme."""
+    return path[len("file:"):] if path.startswith("file:") else path
+
+
 def _local_parquet_files(path: str) -> list[str] | None:
     """Part files of a LOCAL parquet file-or-directory, else None.
 
     None (not []) for non-local URIs, missing paths, and empty dirs —
     callers fall back to the Spark path, which is correct on every
     filesystem."""
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = strip_file_scheme(path)
     if "://" in p:
         return None
     if os.path.isfile(p):

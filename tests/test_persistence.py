@@ -56,8 +56,18 @@ def test_predict_skips_refit_with_saved_model(spark, tmp_path):
     path = str(tmp_path / "model")
     point = (30.0, 10.0, 500.0)
     c1, res1 = run_prediction(spark, _rfm(spark), point, k=4, seed=42, model_path=path)
-    # rfm=None proves no refit happens: serving uses only the saved model
-    c2, res2 = run_prediction(spark, None, point, k=4, seed=42, model_path=path)
+    # rfm=None proves no refit happens: serving uses only the saved model,
+    # read on the driver — the predict runs no Spark job at all
+    sc = spark.sparkContext
+    group = "test-saved-model-predict"
+    sc.setJobGroup(group, "predict from a saved local model")
+    try:
+        c2, res2 = run_prediction(spark, None, point, k=4, seed=42, model_path=path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert MS.load_model(spark, str(tmp_path / "absent")) is None
     assert c2 == c1
     assert res2.centroids == res1.centroids
     assert res2.cluster_sizes == res1.cluster_sizes
@@ -210,7 +220,7 @@ def test_graph_tables_serve_from_second_session_without_rebuild(
     E.release(fresh, SF_DIR)
 
 
-def test_registry_report_lists_committed_artifacts(spark):
+def test_registry_report_lists_committed_artifacts(spark, tmp_path):
     rows = {
         (r.snapshot, r.artifact): (r.valid, r.status)
         for r in MS.registry_report(spark).collect()
@@ -218,6 +228,17 @@ def test_registry_report_lists_committed_artifacts(spark):
     assert rows, "the committed registry should not be empty"
     assert rows.get(("sf0.001", "kcell_codebook")) == (True, "valid")
     assert all(v for v, _ in rows.values()), "committed artifacts must be valid"
+
+    # deep check (content crc) of one committed snapshot, through a root
+    # that holds only that tag
+    import os
+
+    root = tmp_path / "reg"
+    root.mkdir()
+    os.symlink(os.path.join(MS.default_model_dir(), "sf0.001"), root / "sf0.001")
+    deep = {r.artifact: r.status for r in MS.registry_report(spark, str(root), deep=True).collect()}
+    assert deep and set(deep) == {a for t, a in rows if t == "sf0.001"}
+    assert set(deep.values()) == {"valid"}, deep
 
 
 def test_registry_report_distinguishes_absent_from_invalid(spark, tmp_path):
@@ -434,7 +455,9 @@ def test_committed_artifacts_match_fresh_rebuild(spark, tmp_path, monkeypatch):
     E.release(spark, SF_DIR)
 
 
-def test_footer_helpers_agree_with_spark_and_meta_paths_agree(spark, tmp_path):
+def test_footer_helpers_agree_with_spark_and_meta_paths_agree(
+    spark, tmp_path, monkeypatch
+):
     """r10: the serve path validates through driver-side pyarrow footer
     reads (no Spark jobs). The helpers must agree EXACTLY with the Spark
     computation they replace — counts, id bounds, and the meta dict —
@@ -478,6 +501,21 @@ def test_footer_helpers_agree_with_spark_and_meta_paths_agree(spark, tmp_path):
     # count did: 3 rows recorded, 3 in the footers
     assert RD.footer_row_count(f"{path}/data") == 3
     assert MS.load_artifact(spark, path, {"kind": "t"}) is not None
+
+    # the Spark read (non-local URIs) returns exactly what the driver-side
+    # pyarrow read returns, for models and artifact meta alike
+    model = str(tmp_path / "model")
+    MS.save_model(
+        spark, model, centroids=[[0.5, -1.25, 2.0], [-0.5, 1.0, 0.125]],
+        scaler_params={f"{c}_{s}": float(i) + 0.1 for i, c in enumerate(FE.RFM_COLS)
+                       for s in ("mean", "std")},
+        k=2, cols=FE.RFM_COLS, cluster_sizes=[(0, 3, 60.0), (1, 2, 40.0)], inertia=1.5,
+    )
+    fast_model = MS.load_model(spark, model)
+    assert fast_model is not None
+    monkeypatch.setattr(RD, "_local_parquet_files", lambda p: None)
+    assert MS.load_model(spark, model) == fast_model
+    assert MS.artifact_meta(spark, path) == fast
 
 
 def test_footer_helpers_cap_falls_back_and_fingerprints_are_identical(
