@@ -18,6 +18,8 @@ from __future__ import annotations
 import math
 from functools import reduce
 
+import numpy as np
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -139,12 +141,10 @@ def py_planted_embedding(vec_id: int) -> list[float]:
 # ---------------------------------------------------------------------------
 
 def _lit_arr(vals: list[float]) -> Column:
-    try:
-        # single array literal node (Spark ≥ 3.4) — much cheaper to
-        # analyze than 64 individual lit nodes wrapped in array()
-        return F.lit([float(v) for v in vals])
-    except Exception:  # pragma: no cover - older Spark fallback
-        return F.array(*[F.lit(float(v)) for v in vals])
+    # an ndarray becomes one array<double> Literal in one py4j call; a
+    # Python list would expand to array(lit(v) for v in vals), one call
+    # and one expression node per element
+    return F.lit(np.asarray(vals, dtype=np.float64))
 
 
 def _fold(prods: Column) -> Column:

@@ -19,11 +19,13 @@ Layout under ``<path>/``:
                written when a fitted MLlib handle is available, so JVM
                pipelines can model.load() it directly.
 
-All writes go through Spark writers, so the path may be any Hadoop-FS
-URI (local, HDFS, s3a), same as any table. Reads of the KB-sized model
-and meta dirs happen on the driver (pyarrow) when the dir is local, and
-through Spark for other URIs, so serving a saved local model runs no
-Spark job. ``load_model`` returns None when no model is saved at the path.
+The path may be any Hadoop-FS URI (local, HDFS, s3a), same as any table.
+The KB-sized model and meta dirs are written and read on the driver
+(pyarrow) when the dir is local, and through Spark for other URIs, so
+saving and serving a local model run no Spark job. A local save is staged
+in a sibling dir and swapped in whole, so a reader sees the old model or
+the new one, never a mix of both. ``load_model`` returns None when no
+model is saved at the path.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ import os
 import shutil
 import time as _time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -68,15 +71,15 @@ def save_model(
     inertia: float | None = None,
     mllib_model=None,
 ) -> None:
-    """Persist a fitted scaler + centroids (and optionally the MLlib model)."""
-    base = path.rstrip("/")
-    spark.createDataFrame([tuple(float(scaler_params[key]) for key in sorted(scaler_params))],
-                          schema=", ".join(f"`{key}` double" for key in sorted(scaler_params))
-                          ).write.mode("overwrite").parquet(f"{base}/scaler")
-    spark.createDataFrame(
-        [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
-        schema="cluster int, center array<double>",
-    ).write.mode("overwrite").parquet(f"{base}/centroids")
+    """Persist a fitted scaler + centroids (and optionally the MLlib model).
+
+    A local save writes on the driver (no Spark job, except the MLlib
+    model's own writer) into a staged dir that replaces the whole model
+    dir in one swap, so a re-save never leaves a new scaler beside old
+    centroids, nor a stale ``mllib/``. Raises ValueError when ``path``
+    exists and holds anything besides a model's subdirs."""
+    import pyarrow as pa
+
     meta = {
         "k": str(int(k)),
         "cols": json.dumps(list(cols)),
@@ -86,11 +89,49 @@ def save_model(
         ),
         "format_version": "1",
     }
-    spark.createDataFrame(
-        sorted(meta.items()), schema="key string, value string"
-    ).write.mode("overwrite").parquet(f"{base}/meta")
-    if mllib_model is not None:
-        mllib_model.write().overwrite().save(f"{base}/mllib")
+    subdirs = ("scaler", "centroids", "meta", "mllib")
+    with _staged(spark, path.rstrip("/"), subdirs) as base:
+        _write_rows(spark, f"{base}/scaler", pa.table(
+            {key: pa.array([float(scaler_params[key])], pa.float64())
+             for key in sorted(scaler_params)}
+        ))
+        _write_rows(spark, f"{base}/centroids", pa.table({
+            "cluster": pa.array(range(len(centroids)), pa.int32()),
+            "center": pa.array([[float(v) for v in c] for c in centroids],
+                               pa.list_(pa.float64())),
+        }))
+        _write_rows(spark, f"{base}/meta", _kv_table(meta))
+        if mllib_model is not None:
+            mllib_model.write().overwrite().save(f"{base}/mllib")
+
+
+def _kv_table(meta: dict[str, str]):
+    """``meta`` as the (key string, value string) table of a ``meta/`` dir."""
+    import pyarrow as pa
+
+    items = sorted(meta.items())
+    return pa.table({
+        "key": pa.array([k for k, _ in items], pa.string()),
+        "value": pa.array([v for _, v in items], pa.string()),
+    })
+
+
+def _write_rows(spark: SparkSession, path: str, table) -> None:
+    """Write the pyarrow ``table`` as the parquet dir ``path`` (overwrite).
+
+    The writer twin of ``_read_rows``: a local dir becomes one
+    ``part-00000.parquet`` written on the driver by pyarrow (no Spark
+    job); other URIs take one Spark write task. Spark reads both back
+    with the same schema."""
+    local = _local_base_for_staging(spark, path)
+    if local is None:
+        spark.createDataFrame(table).coalesce(1).write.mode("overwrite").parquet(path)
+        return
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(local, ignore_errors=True)
+    os.makedirs(local)
+    pq.write_table(table, os.path.join(local, "part-00000.parquet"))
 
 
 def _read_rows(spark: SparkSession, path: str) -> list[dict] | None:
@@ -202,9 +243,9 @@ def load_mllib_model(spark: SparkSession, path: str):
 # identity gate (tests/test_persistence.py + scripts/selfcheck_artifacts.py)
 # exists to catch exactly the case where that discipline slips. Saves are
 # best-effort: a failed write (read-only FS) logs a WARNING and falls back
-# to the in-session build, never fails the query. All writes go through
-# Spark writers and non-local reads through Spark readers (local meta and
-# footers are read on the driver), so paths may be any Hadoop-FS URI — on a cluster
+# to the in-session build, never fails the query. Non-local writes and
+# reads go through Spark (local meta is written and read, and footers are
+# read, on the driver), so paths may be any Hadoop-FS URI — on a cluster
 # this is the shared model registry location; locally it defaults to
 # ``<repo>/spark-warehouse/models`` (env SPARK_GRAFT_MODEL_DIR overrides).
 # ---------------------------------------------------------------------------
@@ -295,6 +336,66 @@ def _prune_stale_scratch(local_base: str, max_age_s: int = 3600) -> None:
         pass
 
 
+@contextmanager
+def _staged(spark: SparkSession, base: str, subdirs: tuple[str, ...]):
+    """Yield the dir a save writes its ``subdirs`` into, then put it in
+    place of ``base`` whole.
+
+    A local ``base`` is staged: the caller writes into a sibling
+    ``.__stage__.<token>`` dir, which is renamed into place after the old
+    dir is renamed away, so a reader sees the complete old dir, the
+    complete new one, or (between the two renames) none — never a mix of
+    two saves. A failed save removes its stage and leaves the old dir.
+    An existing ``base`` holding entries besides ``subdirs`` is refused
+    with ValueError, so a mistyped path (``/tmp``) is never swapped away.
+    Non-local URIs yield ``base`` itself (direct write): rename there is
+    either non-atomic (s3a) or needs a cluster-specific committer."""
+    local = _local_base_for_staging(spark, base)
+    if local is None:
+        yield base
+        return
+    if os.path.lexists(local):
+        foreign = (
+            sorted(set(os.listdir(local)) - set(subdirs))
+            if os.path.isdir(local) else [os.path.basename(local)]
+        )
+        if foreign:
+            raise ValueError(
+                f"refusing to replace {base}: it holds {foreign}, "
+                f"not only {list(subdirs)}"
+            )
+    os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
+    _prune_stale_scratch(local)
+    token = uuid.uuid4().hex[:12]
+    stage = f"{local}.__stage__.{token}"
+    trash = f"{local}.__trash__.{token}"
+    try:
+        yield stage
+        # rename is atomic per dir on one filesystem
+        if os.path.exists(local):
+            os.rename(local, trash)
+        try:
+            os.rename(stage, local)
+        except OSError:
+            # restore the old copy rather than leave the slot empty
+            if os.path.exists(trash) and not os.path.exists(local):
+                os.rename(trash, local)
+            raise
+    finally:
+        # a failed save must not orphan its scratch (disk-full saves would
+        # leak one populated dir per attempt); a kill before this point is
+        # handled by the age-gated prune of the next save
+        shutil.rmtree(trash, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _row_count(spark: SparkSession, data_path: str) -> int:
+    """Rows of a parquet dir: the footer count (no Spark job on local
+    dirs), else a footer-only Spark count."""
+    cnt = _R.footer_row_count(data_path)
+    return spark.read.parquet(data_path).count() if cnt is None else cnt
+
+
 def _content_crc(spark: SparkSession, data_path: str) -> int | None:
     """Order-independent content checksum of a parquet dir: SUM of
     crc32(json(row)) with columns in sorted order. Commutative over rows,
@@ -322,13 +423,15 @@ def save_artifact(
 ) -> None:
     """Persist ``df`` + fingerprint ``meta`` under ``path`` (overwrite).
 
-    Local paths are STAGED: data and meta are written to a sibling
-    ``.__stage__.<token>`` dir and renamed into place (old artifact
-    renamed away first), so a concurrent reader sees the complete old
-    artifact or an absent one — never a mix of two writes' part files.
-    Non-local URIs write directly (data before meta, so a crash leaves a
-    fingerprint-less artifact that load_artifact rejects); the torn-write
-    case there is still caught at load time by the n_rows check.
+    Local paths are STAGED (``_staged``): data and meta are written to a
+    sibling ``.__stage__.<token>`` dir and renamed into place (old
+    artifact renamed away first), so a concurrent reader sees the
+    complete old artifact or an absent one — never a mix of two writes'
+    part files; a dir holding anything besides ``data/`` and ``meta/``
+    is refused (ValueError). Non-local URIs write directly (data before
+    meta, so a crash leaves a fingerprint-less artifact that
+    load_artifact rejects); the torn-write case there is still caught at
+    load time by the n_rows check.
 
     Self-consistency meta is computed from the WRITTEN files:
     ``self_n_rows`` (verified on every load — a footer-only count) and
@@ -362,56 +465,16 @@ def save_artifact(
     if clash:
         raise ValueError(f"artifact meta uses reserved keys: {sorted(clash)}")
 
-    local_base = _local_base_for_staging(spark, base)
-    if local_base is not None:
-        os.makedirs(os.path.dirname(local_base) or ".", exist_ok=True)
-        _prune_stale_scratch(local_base)
-        stage = f"{local_base}.__stage__.{uuid.uuid4().hex[:12]}"
-        write_base = stage
-    else:
-        stage = None
-        write_base = base
-
-    try:
+    with _staged(spark, base, ("data", "meta")) as write_base:
         out = df if n_files is None else df.repartition(int(n_files))
         out.write.mode("overwrite").parquet(f"{write_base}/data")
-        written = spark.read.parquet(f"{write_base}/data")
         all_meta = {
             "format_version": ARTIFACT_VERSION,
-            "self_n_rows": str(written.count()),
+            "self_n_rows": str(_row_count(spark, f"{write_base}/data")),
             "self_content_crc": str(_content_crc(spark, f"{write_base}/data")),
         }
         all_meta.update({k: str(v) for k, v in meta.items()})
-        spark.createDataFrame(
-            sorted(all_meta.items()), schema="key string, value string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{write_base}/meta")
-    except BaseException:
-        # a failed staged write must not orphan its scratch dir
-        # (disk-full saves would otherwise leak one populated dir per
-        # attempt — r9 review); a kill between write and cleanup is
-        # handled by the age-gated prune on the next save
-        if stage is not None:
-            shutil.rmtree(stage, ignore_errors=True)
-        raise
-
-    if stage is not None:
-        # swap: rename the old artifact away, the staged one in. Between
-        # the two renames the artifact is ABSENT (readers rebuild), never
-        # partial; rename is atomic per-dir on one filesystem.
-        trash = f"{local_base}.__trash__.{uuid.uuid4().hex[:12]}"
-        try:
-            if os.path.exists(local_base):
-                os.rename(local_base, trash)
-            try:
-                os.rename(stage, local_base)
-            except OSError:
-                # restore the old copy rather than leave the slot empty
-                if os.path.exists(trash) and not os.path.exists(local_base):
-                    os.rename(trash, local_base)
-                raise
-        finally:
-            shutil.rmtree(trash, ignore_errors=True)
-            shutil.rmtree(stage, ignore_errors=True)
+        _write_rows(spark, f"{write_base}/meta", _kv_table(all_meta))
 
 
 def artifact_meta(spark: SparkSession, path: str) -> dict[str, str] | None:
@@ -443,9 +506,7 @@ def _artifact_status(
     surface, not the serve path."""
     data_path = f"{path.rstrip('/')}/data"
     try:
-        cnt = _R.footer_row_count(data_path)
-        if cnt is None:
-            cnt = spark.read.parquet(data_path).count()
+        cnt = _row_count(spark, data_path)
     except Exception:
         return "no_data"
     if int(meta.get("self_n_rows", -1)) != cnt:

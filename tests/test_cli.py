@@ -35,11 +35,22 @@ def test_parser_defaults():
     assert args.predict is None
 
 
-def test_cli_curate_mode(tmp_path, capsys):
+def _shared_session(spark, monkeypatch):
+    """Hand the CLI the shared test session with a no-op stop: ``main``
+    stops its session on exit, which would end the JVM for every test
+    that runs after it."""
+    import clusterforge_spark.session as S
+
+    monkeypatch.setattr(spark, "stop", lambda: None, raising=False)
+    monkeypatch.setattr(S, "get_spark", lambda *a, **k: spark)
+
+
+def test_cli_curate_mode(spark, tmp_path, capsys, monkeypatch):
     from clusterforge_spark.cli import main
 
     from tests.conftest import SF_DIR
 
+    _shared_session(spark, monkeypatch)
     out = str(tmp_path / "curated_out")
     rc = main(["--input", SF_DIR, "--curate", out])
     assert rc == 0
@@ -50,9 +61,10 @@ def test_cli_curate_mode(tmp_path, capsys):
     assert os.path.isdir(f"{out}/curated") and os.path.isdir(f"{out}/rejects")
 
 
-def test_cli_curate_rejects_csv_input(tmp_path, capsys):
+def test_cli_curate_rejects_csv_input(spark, tmp_path, capsys, monkeypatch):
     from clusterforge_spark.cli import main
 
+    _shared_session(spark, monkeypatch)
     csv = tmp_path / "x.csv"
     csv.write_text("a,b\n1,2\n")
     rc = main(["--input", str(csv), "--curate", str(tmp_path / "o")])

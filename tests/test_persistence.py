@@ -75,6 +75,8 @@ def test_predict_skips_refit_with_saved_model(spark, tmp_path):
 
 
 def test_mllib_model_saved_in_distributed_regime(spark, tmp_path):
+    import os
+
     path = str(tmp_path / "model")
     # force the distributed branch with a tiny driver_fit_threshold
     res = run_full_pipeline(
@@ -88,6 +90,95 @@ def test_mllib_model_saved_in_distributed_regime(spark, tmp_path):
     assert len(got) == len(res.centroids)
     for g, want in zip(got, res.centroids):
         assert g == pytest.approx(want)
+
+    # a driver-regime re-save replaces the whole dir: no stale mllib/
+    res2 = run_full_pipeline(spark, _rfm(spark), n_rows=-1, k=4, seed=42, model_path=path)
+    assert sorted(os.listdir(path)) == ["centroids", "meta", "scaler"]
+    assert MS.load_model(spark, path).centroids == res2.centroids
+
+
+def _save_small_model(spark, path, shift=0.0):
+    MS.save_model(
+        spark, path, centroids=[[0.5 + shift, -1.25, 2.0], [-0.5, 1.0, 0.125]],
+        scaler_params={f"{c}_{s}": float(i) + 0.1 for i, c in enumerate(FE.RFM_COLS)
+                       for s in ("mean", "std")},
+        k=2, cols=FE.RFM_COLS, cluster_sizes=[(0, 3, 60.0), (1, 2, 40.0)],
+        inertia=1.5 + shift,
+    )
+
+
+def test_local_save_model_runs_no_spark_job_and_matches_spark_write(
+    spark, tmp_path, monkeypatch
+):
+    """A local model save writes on the driver (0 Spark jobs); the Spark
+    writer that non-local URIs take produces the same model and schemas."""
+    import os
+
+    driver = str(tmp_path / "driver")
+    sc = spark.sparkContext
+    group = "test-local-save-model"
+    sc.setJobGroup(group, "save a model to a local dir")
+    try:
+        _save_small_model(spark, driver)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert os.listdir(f"{driver}/meta") == ["part-00000.parquet"]
+
+    via_spark = str(tmp_path / "spark")
+    with monkeypatch.context() as m:
+        m.setattr(MS, "_local_base_for_staging", lambda s, p: None)
+        _save_small_model(spark, via_spark)
+    assert "_SUCCESS" in os.listdir(f"{via_spark}/meta")  # the Spark writer ran
+    assert MS.load_model(spark, via_spark) == MS.load_model(spark, driver)
+    for sub in ("scaler", "centroids", "meta"):
+        got = [
+            [f.simpleString() for f in spark.read.parquet(f"{p}/{sub}").schema.fields]
+            for p in (driver, via_spark)
+        ]
+        assert got[0] == got[1], sub
+    assert spark.read.parquet(f"{driver}/centroids").schema.simpleString() == (
+        "struct<cluster:int,center:array<double>>"
+    )
+
+
+def test_model_resave_is_atomic_and_refuses_foreign_dirs(spark, tmp_path, monkeypatch):
+    """A re-save swaps the whole model dir in: a save that fails midway
+    leaves the previous model loadable and unchanged, with no scratch
+    sibling; a dir holding anything besides model subdirs is refused."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "model")
+    _save_small_model(spark, path)
+    before = MS.load_model(spark, path)
+
+    real_write = pq.write_table
+
+    def fail_on_meta(table, where, *a, **kw):
+        if os.path.basename(os.path.dirname(str(where))) == "meta":
+            raise OSError("disk full")
+        return real_write(table, where, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", fail_on_meta)
+        with pytest.raises(OSError, match="disk full"):
+            _save_small_model(spark, path, shift=1.0)
+    assert MS.load_model(spark, path) == before
+    assert os.listdir(tmp_path) == ["model"]  # no .__stage__. / .__trash__.
+
+    _save_small_model(spark, path, shift=1.0)
+    assert MS.load_model(spark, path).inertia == 2.5
+
+    foreign = tmp_path / "notamodel"
+    foreign.mkdir()
+    (foreign / "keep.txt").write_text("keep")
+    with pytest.raises(ValueError, match="refusing to replace"):
+        _save_small_model(spark, str(foreign))
+    assert os.listdir(foreign) == ["keep.txt"]
+    assert (foreign / "keep.txt").read_text() == "keep"
 
 
 # ---------------------------------------------------------------------------
@@ -505,12 +596,7 @@ def test_footer_helpers_agree_with_spark_and_meta_paths_agree(
     # the Spark read (non-local URIs) returns exactly what the driver-side
     # pyarrow read returns, for models and artifact meta alike
     model = str(tmp_path / "model")
-    MS.save_model(
-        spark, model, centroids=[[0.5, -1.25, 2.0], [-0.5, 1.0, 0.125]],
-        scaler_params={f"{c}_{s}": float(i) + 0.1 for i, c in enumerate(FE.RFM_COLS)
-                       for s in ("mean", "std")},
-        k=2, cols=FE.RFM_COLS, cluster_sizes=[(0, 3, 60.0), (1, 2, 40.0)], inertia=1.5,
-    )
+    _save_small_model(spark, model)
     fast_model = MS.load_model(spark, model)
     assert fast_model is not None
     monkeypatch.setattr(RD, "_local_parquet_files", lambda p: None)
